@@ -23,24 +23,15 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt
-    // Twin-probe mode: force every budget-gated iterative operator onto
-    // its DISTRIBUTED path (GraphAlgorithms.gatedBudget) so the 100 TB
-    // code paths keep a tracked sf0.1 runtime — the corpus graphs all
-    // sit under the compact budgets, so a regression in a distributed
-    // twin would otherwise be invisible until cluster scale. Typically
-    // combined with SPARK_GRAFT_BENCH_ONLY over the gated queries.
-    val forceDistributed =
-      sys.env.get("SPARK_GRAFT_FORCE_DISTRIBUTED").contains("1")
-    if (forceDistributed) sys.props("graft.forceDistributed") = "1"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Twin-probe mode (SPARK_GRAFT_FORCE_DISTRIBUTED=1, see GraftSession):
+    // the 100 TB distributed twins keep a tracked sf0.1 runtime — the
+    // corpus graphs all sit under the compact budgets, so a regression
+    // in a distributed twin would otherwise be invisible until cluster
+    // scale. Typically combined with SPARK_GRAFT_BENCH_ONLY over the
+    // gated queries.
+    val spark = GraftSession.build()
+    val forceDistributed = sys.props.get("graft.forceDistributed").contains("1")
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     def gcMillis: Long = {
       import scala.jdk.CollectionConverters._
@@ -52,21 +43,7 @@ object Bench {
       case _ => -1L
     }
     val wall0 = System.nanoTime(); val cpu0 = cpuNanos; val gc0 = gcMillis
-    try { SparkEntry.queries("q1_agg")(spark, sfDir).count() }
-    catch { case _: Throwable => () } // warmup — untimed
-    // Warm the derived corpus-graph store once, untimed: in the
-    // reference this graph is WRITTEN at ingest and only READ by the
-    // graph queries, so its derivation is not part of any query's cost.
-    // The persisted frames are protected from the per-query eviction
-    // below (they are the session's store, not per-query state).
-    try {
-      Seq(
-        graft.operators.GraphFusion.explainsGraph(spark, sfDir),
-        graft.operators.CrossBoundary.conceptGraph(spark, sfDir),
-        graft.operators.GraphQueries.narrativeGraph(spark, sfDir)
-      ).foreach { case (e, n) => e.count(); n.count() }
-    } catch { case _: Throwable => () }
-    val protectedIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val evictPins = warmStore(spark, sfDir)
     // Optional comma-separated filter for isolated fresh-JVM probes of
     // individual queries (regression bisection without a full run).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -94,15 +71,7 @@ object Bench {
         val n = try { fn(spark, sfDir).queryExecution.toRdd.count() }
           catch { case _: Throwable => -1L }
         val sec = (System.nanoTime() - t0) / 1e9
-        // Drop caches/checkpoints a query left behind so heap pressure
-        // doesn't compound into later timings — EXCEPT the corpus-graph
-        // store frames warmed above, which are session-lifetime by
-        // design (localCheckpoint-backed, so clearCache can't touch
-        // them; the RDD eviction loop must skip them explicitly).
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => protectedIds.contains(id) }
-          .values.foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
+        evictPins()
         (sec, n)
       }
       // Compact the heap between queries: accumulated garbage from a
@@ -169,5 +138,38 @@ object Bench {
       s""""sf":"$sfDir","repeats":$repeats,"forcing":"toRdd",""" +
       s""""force_distributed":$forceDistributed}""")
     spark.stop()
+  }
+
+  /** Untimed warmup shared by Bench and Probe; returns the per-query
+    * evictor.
+    *
+    * One q1_agg run pays classloading, parquet-footer and first-codegen
+    * costs. Then the derived corpus-graph store is built once: in the
+    * reference this graph is WRITTEN at ingest and only READ by the
+    * graph queries, so its derivation is not part of any query's cost.
+    *
+    * The evictor drops the caches and checkpoints a query left behind,
+    * so heap pressure does not compound into later timings — except
+    * every RDD already persisted when the warmup ends, the store among
+    * them. The store is localCheckpoint-backed, so clearCache cannot
+    * touch it; the RDD eviction must skip it explicitly.
+    */
+  private[graft] def warmStore(spark: SparkSession, sfDir: String): () => Unit = {
+    try SparkEntry.queries("q1_agg")(spark, sfDir).count()
+    catch { case _: Throwable => () }
+    try {
+      Seq(
+        graft.operators.GraphFusion.explainsGraph(spark, sfDir),
+        graft.operators.CrossBoundary.conceptGraph(spark, sfDir),
+        graft.operators.GraphQueries.narrativeGraph(spark, sfDir)
+      ).foreach { case (e, n) => e.count(); n.count() }
+    } catch { case _: Throwable => () }
+    val protectedIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    () => {
+      spark.sparkContext.getPersistentRDDs
+        .filterNot { case (id, _) => protectedIds.contains(id) }
+        .values.foreach(_.unpersist(blocking = false))
+      spark.catalog.clearCache()
+    }
   }
 }

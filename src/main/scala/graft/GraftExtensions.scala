@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import org.apache.spark.sql.graft.{CosineSimilarity, GramCounts, IntArrayMatchCount, Md5NibbleHashes, Md5NibbleShingleHashes, ShingleHashes, SimHash64, SimHashBits, SortedIntersectCount}
 
@@ -10,92 +11,36 @@ import org.apache.spark.sql.graft.{CosineSimilarity, GramCounts, IntArrayMatchCo
   * Users opt in with
   * `spark.sql.extensions=graft.GraftExtensions` (the supported Spark
   * mechanism for third-party Catalyst extensions), or imperatively via
-  * [[GraftFunctions.register]] on a live session.
+  * [[GraftFunctions.register]] on a live session. Both register exactly
+  * [[GraftFunctions.sqlFunctions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      CosineSimilarity.info,
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CosineSimilarity(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sorted_intersect_count"),
-      SortedIntersectCount.info,
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SortedIntersectCount(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash64"),
-      SimHash64.info,
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHash64(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash_bits"),
-      SimHashBits.info,
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHashBits(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingle_hashes"),
-      ShingleHashes.info,
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ShingleHashes(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_gram_counts"),
-      GramCounts.info,
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GramCounts(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_int_array_match_count"),
-      IntArrayMatchCount.info,
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        IntArrayMatchCount(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_md5_shingle_hashes"),
-      Md5NibbleShingleHashes.info,
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Md5NibbleShingleHashes(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_md5_hashes"),
-      Md5NibbleHashes.info,
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Md5NibbleHashes(children(0))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach { case (name, info, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), info, builder))
+    }
 }
 
 object GraftFunctions {
+  /** Every graft function callable from SQL: (name, info, builder). */
+  private[graft] val sqlFunctions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    ("graft_cosine", CosineSimilarity.info, c => CosineSimilarity(c(0), c(1))),
+    ("graft_sorted_intersect_count", SortedIntersectCount.info,
+      c => SortedIntersectCount(c(0), c(1))),
+    ("graft_simhash64", SimHash64.info, c => SimHash64(c(0))),
+    ("graft_simhash_bits", SimHashBits.info, c => SimHashBits(c(0))),
+    ("graft_shingle_hashes", ShingleHashes.info, c => ShingleHashes(c(0))),
+    ("graft_gram_counts", GramCounts.info, c => GramCounts(c(0))),
+    ("graft_int_array_match_count", IntArrayMatchCount.info,
+      c => IntArrayMatchCount(c(0), c(1))),
+    ("graft_md5_shingle_hashes", Md5NibbleShingleHashes.info, c => Md5NibbleShingleHashes(c(0))),
+    ("graft_md5_hashes", Md5NibbleHashes.info, c => Md5NibbleHashes(c(0))))
+
   /** Idempotently register graft functions for SQL use on a session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine",
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CosineSimilarity(children(0), children(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_intersect_count",
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SortedIntersectCount(children(0), children(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64",
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHash64(children(0)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle_hashes",
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ShingleHashes(children(0)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_counts",
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GramCounts(children(0)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_int_array_match_count",
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        IntArrayMatchCount(children(0), children(1)),
-      "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, _, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
 
   /** Cosine similarity via the fused native expression: one codegen'd
     * loop per row, no intermediate arrays. Agrees exactly with

@@ -103,13 +103,7 @@ object Recall {
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val scale = args.drop(1).headOption.map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val hard = sys.env.get("SPARK_GRAFT_RECALL_HARD").contains("1")
     // probe-set size: 5 historically; 50 tightens the sweep's recall
     // quantum from 0.02 to 0.002 (round-11 close item #4)

@@ -158,14 +158,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val scale = args.headOption.map(_.toInt).getOrElse(10)
     val baseDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val out = scaledDir(spark, baseDir, scale)
     println(s"scaled corpus ready: $out")
     spark.stop()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -31,21 +30,10 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Dump-diff hook for the budget-gated iterative operators: with
-    // SPARK_GRAFT_FORCE_DISTRIBUTED=1 the dumps come from the
-    // distributed twins (GraphAlgorithms.gatedBudget), so
-    // compact-vs-distributed output equality is checkable at the full
-    // dump level, not just on spec fixtures.
-    if (sys.env.get("SPARK_GRAFT_FORCE_DISTRIBUTED").contains("1"))
-      sys.props("graft.forceDistributed") = "1"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // With SPARK_GRAFT_FORCE_DISTRIBUTED=1 (see GraftSession) the dumps
+    // come from the distributed twins, so compact-vs-distributed output
+    // equality is checkable at the full dump level.
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated filter for fast single-operator iteration
     // (the driver gate always runs unfiltered).

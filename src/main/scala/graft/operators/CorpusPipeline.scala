@@ -52,13 +52,11 @@ object CorpusPipeline {
   def corpusPipeline(spark: SparkSession, dir: String): DataFrame =
     corpusPipelineOf(pinnedCorpus(spark, dir))
 
-  /** The single corpus scan, pinned — at explicit session width
-    * (round 16): localCheckpoint FREEZES the upstream layout (the
-    * minhashCore lesson), and a small parquet file scans as ONE split,
-    * so without the repartition every text-heavy stage hanging off the
-    * pinned frame (boilerplate line explode, quality gates, decontam
-    * grams, BPE token counts) runs single-wide. Work per row is orders
-    * of magnitude heavier than its bytes; spread it once at the pin.
+  /** The single corpus scan, pinned: every stage reads this frame, so
+    * the parquet is scanned once. localCheckpoint freezes the scan's
+    * own layout; the pin deliberately adds no repartition, because
+    * spreading the corpus at the pin measured costlier than the
+    * single-split stages it would widen.
     */
   private def pinnedCorpus(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)

@@ -63,7 +63,6 @@ object StreamOps {
   /** File-source stream over the events parquet; emits canonical
     * `ts: TimestampType` regardless of the on-disk encoding. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType = graft.Tables.eventsTsType(spark, dir)
     val base = streamSource(spark, dir, "events", eventsRawSchema(tsType))
     tsType match {

@@ -15,6 +15,11 @@ object Bridge extends org.apache.spark.internal.Logging {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Block until every posted listener event has been delivered, so a
+    * listener's counters are complete before they are read. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** The same DataFrame minus a trailing GLOBAL Sort, when one is the
     * plan's top node (round-15 optimization; see
     * [[graft.SparkEntry.queries]] for the contract argument). A
