@@ -137,6 +137,28 @@ object GraftFunctions {
       org.apache.spark.sql.graft.SimHashLshKeys(
         org.apache.spark.sql.graft.Bridge.expression(sh), positions))
 
+  /** Per-document counts of `terms` among the BM25 tokens of `text`,
+    * as `array<int>` aligned with `terms` — equals counting
+    * `explode(TextFunctions.tokenizeBm25(text))` per term, without the
+    * explode (see Bm25TermCounts' scaladoc). Column-API only: the term
+    * list is a constructor parameter.
+    */
+  def bm25TermCounts(text: Column, terms: Seq[String]): Column =
+    org.apache.spark.sql.graft.Bridge.column(
+      org.apache.spark.sql.graft.Bm25TermCounts(
+        org.apache.spark.sql.graft.Bridge.expression(text), terms))
+
+  /** Per-position `Σ w·v / Σ w` of a list of vectors (any numeric
+    * element type, cast to double) paired by index with `weights` —
+    * the query-vector kernel over `collect_list`ed example rows (see
+    * WeightedMeanVector's scaladoc).
+    */
+  def weightedMeanVector(vectors: Column, weights: Column): Column =
+    org.apache.spark.sql.graft.Bridge.column(
+      org.apache.spark.sql.graft.WeightedMeanVector(
+        org.apache.spark.sql.graft.Bridge.expression(vectors.cast("array<array<double>>")),
+        org.apache.spark.sql.graft.Bridge.expression(weights.cast("array<double>"))))
+
   /** Sorted distinct xxhash64 values of all character 3-grams in one
     * byte-level pass — equals `array_sort(array_distinct(transform(
     * sequence(1, greatest(length(t) - 2, 1)), i -> xxhash64(substr(t,

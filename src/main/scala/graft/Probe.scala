@@ -5,8 +5,10 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,6 +24,11 @@ import graft.operators.{Dedup, GraphAlgorithms, Leiden, SkewJoin, VectorSearch}
   * Per query it prints:
   *   - `[probe] <name> round N: <s>s rows=<n>` for each round
   *     (scripts/jit_audit_r14.sh parses round 2);
+  *   - `[probe] <name> codegen round1=<n> round2=<n> compile_s=<s>`: the
+  *     classes the code generator compiled in each round (cache misses)
+  *     and the compile seconds of both rounds. A warm round above 0
+  *     means the query's classes were evicted from the class cache of
+  *     the code generator;
   *   - round 2's `[job]` lines: each job's start gap since the previous
   *     job ended (driver-side work: planning, collect processing,
   *     checkpoint bookkeeping) and its duration (cluster work);
@@ -42,7 +49,13 @@ import graft.operators.{Dedup, GraphAlgorithms, Leiden, SkewJoin, VectorSearch}
 object Probe {
 
   /** What one probed query reported for its warm round. */
-  final case class Result(name: String, rows: Long, counters: Counters, plan: String)
+  final case class Result(name: String, rows: Long, counters: Counters, plan: String,
+                          codegen: String)
+
+  /** (classes compiled, compile nanoseconds) by this JVM's code
+    * generator so far. */
+  private def codegenNow: (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
@@ -69,7 +82,9 @@ object Probe {
         System.err.println(f"[probe] $name round $r: $sec%.2fs rows=$n")
         (qe, n)
       }
+      val (c0, ns0) = codegenNow
       round(1)
+      val (c1, _) = codegenNow
       evictPins()
       val counters = new Counters
       spark.sparkContext.addSparkListener(counters)
@@ -79,6 +94,10 @@ object Probe {
           Bridge.drainListeners(spark.sparkContext)
           spark.sparkContext.removeSparkListener(counters)
         }
+      val (c2, ns2) = codegenNow
+      val codegen = f"[probe] $name codegen round1=${c1 - c0} round2=${c2 - c1} " +
+        f"compile_s=${(ns2 - ns0) / 1e9}%.3f"
+      System.err.println(codegen)
       System.err.println(s"[probe] $name ${counters.row}")
       qe.tracker.phases.foreach { case (p, s) =>
         System.err.println(f"[phase] $name $p ${(s.endTimeMs - s.startTimeMs) / 1e3}%.3f s")
@@ -90,7 +109,7 @@ object Probe {
       val plan = qe.explainString(ExplainMode.fromString("formatted"))
       System.err.println(plan)
       evictPins()
-      Result(name, rows, counters, plan)
+      Result(name, rows, counters, plan, codegen)
     }
   }
 

@@ -10,20 +10,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cache here; operators decide.
   */
 object Tables {
-  /** Parquet footer SCHEMAS memoized per path (round 16): without a
-    * catalog, every `spark.read.parquet` re-infers the schema by
-    * reading the footer on the driver at query-construction time —
-    * sampled at 1-2 s per bench query spread across its table loads
-    * (SchemaMergeUtils.mergeSchemasInParallel on the main thread).
-    * This memo is METADATA only — the exact metastore behaviour a real
-    * deployment gets from its catalog — and never caches rows; every
-    * query still scans the parquet data itself.
+  /** Parquet footer SCHEMAS memoized per path and per the values of
+    * the session confs that change how a footer maps to a Spark schema
+    * ([[schemaConfs]]): without a catalog, every `spark.read.parquet`
+    * re-infers the schema by reading the footer on the driver at
+    * query-construction time — sampled at 1-2 s per bench query spread
+    * across its table loads (SchemaMergeUtils.mergeSchemasInParallel
+    * on the main thread). This memo is METADATA only — the exact
+    * metastore behaviour a real deployment gets from its catalog — and
+    * never caches rows; every query still scans the parquet data
+    * itself.
     */
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[String]), org.apache.spark.sql.types.StructType]()
+
+  /** Confs under which one parquet footer infers different types:
+    * TIMESTAMP(NANOS) is a long only under nanosAsLong, and a
+    * not-UTC-adjusted timestamp is TIMESTAMP_NTZ only under
+    * inferTimestampNTZ. */
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.inferTimestampNTZ.enabled")
 
   private[graft] def cachedSchema(spark: SparkSession, path: String) =
-    schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
+    schemaCache.computeIfAbsent((path, schemaConfs.map(k => spark.conf.getOption(k).orNull)),
+      _ => spark.read.parquet(path).schema)
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"

@@ -45,20 +45,17 @@ object TextFunctions {
       length(t) > 1 && !array_contains(stopwordsLit, t))
   }
 
-  /** bm25.rs-style tokenizer with junk filtering. */
+  /** bm25.rs-style tokenizer with junk filtering. The patterns live in
+    * [[org.apache.spark.sql.graft.Bm25TermCounts]], whose scalar
+    * tokenizer runs the same steps for query strings and per-term
+    * counts. */
   def tokenizeBm25(text: Column): Column = {
-    // Split chars: whitespace plus (){}[]<>;:,."'`~!@#$%^&*+=|\
-    val splitPattern = """[\s(){}\[\]<>;:,."'`~!@#$%^&*+=|\\]+"""
-    val raw = split(text, splitPattern)
-    val trimmed = transform(raw, t => regexp_replace(t, "^[-_/]+|[-_/]+$", ""))
+    import org.apache.spark.sql.graft.Bm25TermCounts.{JunkRegexes, SplitRegex, TrimRegex}
+    val raw = split(text, SplitRegex)
+    val trimmed = transform(raw, t => regexp_replace(t, TrimRegex, ""))
     val kept = filter(trimmed, t => length(t) > 1)
     val lowered = transform(kept, t => lower(t))
-    filter(lowered, t =>
-      !t.rlike("^[a-f0-9]{8,}$") &&
-      !t.rlike("^v?[0-9]+\\.[0-9]+") &&
-      !t.rlike("[/\\\\]") &&
-      !t.rlike("^0x[a-f0-9]+$") &&
-      !t.rlike("^[0-9]+$"))
+    filter(lowered, t => JunkRegexes.map(r => !t.rlike(r)).reduce(_ && _))
   }
 
   /** Term frequency pairs are built by explode + groupBy at the operator

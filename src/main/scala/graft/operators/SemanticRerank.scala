@@ -20,29 +20,29 @@ import graft.Tables
   * document's whitespace token count, wt/(wt+k1) with the reference's
   * k1 = 1.2 — exact rational column math on both engines.
   *
-  * Plan shape: the mean vector is a per-position aggregate of the tiny
-  * context set re-packed into ONE broadcast row; candidates are one
-  * pruned corpus scan → broadcast-nested-loop with that row → fused
-  * cosine → TakeOrderedAndProject(k). No corpus shuffle at any scale.
+  * Plan shape: the mean vector is ONE aggregate over the tiny context
+  * set (collect the vectors and weights, sum the weights) finished by
+  * `graft_weighted_mean_vector` into one broadcast row — no Generate,
+  * no shuffle keyed by position; candidates are one pruned corpus scan
+  * → broadcast-nested-loop with that row → fused cosine →
+  * TakeOrderedAndProject(k). No corpus shuffle at any scale.
   */
 object SemanticRerank {
 
   /** weighted_mean_vector over a (embedding, weight) frame: one row
-    * holding `q_emb` = Σ wᵢ·vᵢ / Σ wᵢ per position. Returns None-shaped
-    * empty frame when the input is empty or all-zero-weight, like the
-    * reference (guarded by the caller's crossJoin semantics: an empty
-    * mean side yields no output rows).
+    * holding `q_emb` = Σ wᵢ·vᵢ / Σ wᵢ per position. Returns an empty
+    * frame when the input is empty or Σ wᵢ ≤ 1e-10, like the reference
+    * (semantic_rerank.rs:89 guard; the caller's crossJoin then yields
+    * no output rows). Rows with a NULL embedding or weight contribute
+    * nothing, as `sum` skips them.
     */
   def weightedMeanVector(ctx: DataFrame): DataFrame =
-    ctx.select(col("weight").cast("double").as("w"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("v", col("v").cast("double"))
-      .groupBy(col("pos"))
-      // total_weight < 1e-10 → no vector (semantic_rerank.rs:89 guard;
-      // also keeps ANSI mode from throwing on a zero divisor)
-      .agg(when(sum(col("w")) > 1e-10, sum(col("v") * col("w")) / sum(col("w"))).as("qv"))
-      .filter(col("qv").isNotNull)
-      .agg(array_sort(collect_list(struct(col("pos"), col("qv")))).as("pairs"))
-      .select(transform(col("pairs"), p => p.getField("qv")).as("q_emb"))
+    ctx.select(col("embedding"), col("weight").cast("double").as("w"))
+      .filter(col("embedding").isNotNull && col("w").isNotNull)
+      .agg(collect_list(col("embedding")).as("vs"), collect_list(col("w")).as("ws"),
+        sum(col("w")).as("tw"))
+      .select(when(col("tw") > 1e-10,
+        graft.GraftFunctions.weightedMeanVector(col("vs"), col("ws"))).as("q_emb"))
       .filter(size(col("q_emb")) > 0)
 
   /** rerank_candidates over a (vec_id, embedding, lex) frame vs a 1-row

@@ -32,14 +32,19 @@ import graft.functions.TextFunctions._
   *    survives intervening file-tier rows and resets only on a
   *    fully-new source. Then the list re-sorts by adjusted score.
   *
-  * Scale posture: corpus stats (term → df) are a groupBy aggregate;
-  * for query-scoped operators both sides of the scoring join are
-  * pre-filtered to the query's terms so the broadcast side is a handful
-  * of rows regardless of corpus size. Corpus-wide operators join tf to
-  * stats WITHOUT a broadcast hint — AQE picks broadcast while the vocab
-  * fits and falls back to a (skew-mitigated) shuffle join beyond that.
-  * N(docs) rides the plan as a broadcast 1-row aggregate — no
-  * driver-side count() actions. Rankings output integer ranks only
+  * Scale posture: query-scoped scoring (everything built on
+  * [[bm25ScoresForQuery]] and [[bm25TopKExpanded]]) is one corpus scan
+  * plus a 1-row stats broadcast. The scan counts the query's terms per
+  * document inside the projection (`graft_bm25_term_counts`); one
+  * global aggregate over those counts yields N(docs) and each term's
+  * df, and that single row is broadcast back to the scan for scoring.
+  * Nothing keyed by term is shuffled, so a 4-term query costs the same
+  * whatever the corpus vocabulary. Corpus-wide operators
+  * (`sparseVectors`, `idfRebalance`, `keywordTfidf`) need every term:
+  * they join tf to stats WITHOUT a broadcast hint — AQE picks
+  * broadcast while the vocab fits and falls back to a (skew-mitigated)
+  * shuffle join beyond that, with N(docs) riding the plan as a
+  * broadcast 1-row aggregate. Rankings output integer ranks only
   * (hash-stable across engines).
   */
 object SparseSearch {
@@ -65,21 +70,10 @@ object SparseSearch {
   def docFreq(tf: DataFrame): DataFrame =
     tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
 
-  /** Scala-side mirror of tokenize_for_bm25 for driver-held query
-    * strings (bm25.rs:16-55): split on ws+punct, trim `-_/`, len > 1,
-    * lowercase, junk filter. Kept 1:1 with [[graft.functions.TextFunctions.tokenizeBm25]].
-    */
+  /** tokenize_for_bm25 of a driver-held query string — the scalar side
+    * of the kernel behind [[graft.functions.TextFunctions.tokenizeBm25]]. */
   def tokenizeBm25Query(text: String): Seq[String] =
-    text.split("[\\s(){}\\[\\]<>;:,.\"'`~!@#$%^&*+=|\\\\]+").toSeq
-      .map(_.replaceAll("^[-_/]+|[-_/]+$", ""))
-      .filter(_.length > 1)
-      .map(_.toLowerCase)
-      .filterNot(t =>
-        t.matches("[a-f0-9]{8,}") ||
-        t.matches("v?[0-9]+\\.[0-9]+.*") ||
-        t.contains("/") || t.contains("\\") ||
-        t.matches("0x[a-f0-9]+") ||
-        t.matches("[0-9]+"))
+    org.apache.spark.sql.graft.Bm25TermCounts.tokenize(text)
 
   /** 1-row (n_docs) corpus size as a broadcast dimension — keeps N
     * inside the plan instead of a driver-side count() action. */
@@ -87,25 +81,30 @@ object SparseSearch {
     df.crossJoin(broadcast(docs.agg(count(lit(1)).cast("double").as("n_docs"))))
 
   /** BM25 IDF: ln((N-df+0.5)/(df+0.5)) floored at 0 (bm25.rs:184). */
-  private def idfCol: Column =
-    greatest(log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)), lit(0.0))
+  private def idf(df: Column): Column =
+    greatest(log((col("n_docs") - df + 0.5) / (df + 0.5)), lit(0.0))
 
   /** Shared BM25 scorer: per-doc score for a weighted term set.
-    * `weights` is a tiny (term, tw) DataFrame; the df-stats side is
-    * filtered to those terms BEFORE broadcasting, so both probe and
-    * build side of the scoring join scale with the query, not the
-    * corpus. Zero-score docs are dropped (bm25.rs semantics); an
-    * optional `score_threshold` filters before ranking (search.rs:251).
+    * The scan counts each term per document (`tf_i`); one global
+    * aggregate of those counts gives `n_docs` and `df_i = Σ[tf_i > 0]`
+    * and is broadcast as one row; the score is
+    * `Σ_i idf_i·(k1·tf_i)/(tf_i+k1)·tw_i`. Zero-score docs are dropped
+    * (bm25.rs semantics); an optional `score_threshold` filters before
+    * ranking (search.rs:251).
     */
-  private def bm25Scores(docs: DataFrame, weights: DataFrame,
+  private def bm25Scores(docs: DataFrame, weights: Seq[(String, Double)],
                          threshold: Option[Double]): DataFrame = {
-    val tf = termFreqBm25(docs)
-    val stats = docFreq(tf).join(broadcast(weights), "term")
-    val scored = withNDocs(tf.join(broadcast(stats), "term"), docs)
-      .withColumn("contrib",
-        idfCol * (lit(K1) * col("tf")) / (col("tf") + lit(K1)) * col("tw"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("contrib")).as("score"))
+    val terms = weights.map(_._1)
+    val tf = docs.select(col("doc_id"),
+      graft.GraftFunctions.bm25TermCounts(col("text"), terms).as("tf"))
+    def tfAt(i: Int): Column = col("tf").getItem(i)
+    val stats = tf.agg(count(lit(1)).cast("double").as("n_docs"),
+      terms.indices.map(i => sum(when(tfAt(i) > 0, 1).otherwise(0)).as(s"df_$i")): _*)
+    val contribs = weights.zipWithIndex.map { case ((_, tw), i) =>
+      idf(col(s"df_$i")) * (lit(K1) * tfAt(i)) / (tfAt(i) + lit(K1)) * lit(tw)
+    }
+    val scored = tf.crossJoin(broadcast(stats))
+      .select(col("doc_id"), contribs.reduceOption(_ + _).getOrElse(lit(0.0)).as("score"))
       .filter(col("score") > 0)
     threshold.fold(scored)(t => scored.filter(col("score") >= t))
   }
@@ -136,9 +135,7 @@ object SparseSearch {
     * also used by cross-collection search. */
   def bm25ScoresForQuery(spark: SparkSession, docs: DataFrame, query: String,
                          threshold: Option[Double] = None): DataFrame = {
-    import spark.implicits._
-    val weights = tokenizeBm25Query(query).distinct.map(_ -> 1.0).toDF("term", "tw")
-    bm25Scores(docs, weights, threshold)
+    bm25Scores(docs, tokenizeBm25Query(query).distinct.map(_ -> 1.0), threshold)
   }
 
   /** Sparse query expansion (reference:
@@ -155,18 +152,17 @@ object SparseSearch {
 
   /** BM25 retrieval with expansion keywords merged at `weight` — the
     * search tool's tag-basket expansion path, as one plan: per-term
-    * weights ride a broadcast dimension into the scoring join.
+    * weights are literals of the score expression.
     */
   def bm25TopKExpanded(spark: SparkSession, dir: String,
                        query: String = "dup vector",
                        expansion: Seq[String] = Seq("window", "fast", "line"),
                        weight: Double = 0.5, k: Int = 10): DataFrame = {
-    import spark.implicits._
     val docs = Tables.documents(spark, dir)
     val weights = mergeSparseVectors(
       tokenizeBm25Query(query).distinct.map(_ -> 1.0).toMap,
       expansion.map(_ -> 1.0).toMap, weight)
-    rankTopK(bm25Scores(docs, weights.toSeq.toDF("term", "tw"), None), k)
+    rankTopK(bm25Scores(docs, weights.toSeq, None), k)
   }
 
   /** Per-document sparse-vector summary (the reference materializes one
@@ -178,7 +174,7 @@ object SparseSearch {
     val docs = Tables.documents(spark, dir)
     val tf = termFreqBm25(docs)
     withNDocs(tf.join(docFreq(tf), "term"), docs)
-      .withColumn("w", idfCol * (lit(K1) * col("tf")) / (col("tf") + lit(K1)))
+      .withColumn("w", idf(col("df")) * (lit(K1) * col("tf")) / (col("tf") + lit(K1)))
       .filter(col("w") > 0)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("nnz"),

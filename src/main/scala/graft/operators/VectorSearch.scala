@@ -55,32 +55,25 @@ object VectorSearch {
       .orderBy(col("rnk"))
   }
 
-  /** Qdrant-style recommend: query vector = avg(positive) − avg(negative),
-    * computed declaratively (posexplode → per-position avg → re-packed
-    * array) so the whole thing is one plan; examples are excluded from
-    * the candidates as Qdrant does.
+  /** Qdrant-style recommend: query vector = avg(positive) − avg(negative)
+    * per position, an absent side counting as 0; examples are excluded
+    * from the candidates as Qdrant does.
+    *
+    * Plan shape: one aggregate over the few example rows collects the
+    * positive and the negative embeddings; `graft_weighted_mean_vector`
+    * (unit weights) averages each list and `zip_with` subtracts them,
+    * giving ONE query row that is broadcast into a pruned corpus scan →
+    * broadcast-nested-loop → fused cosine → TakeOrderedAndProject(k).
+    * No Generate and no shuffle of the corpus.
     */
   def recommend(spark: SparkSession, dir: String,
                 positive: Seq[Long] = Seq(1L, 2L, 3L),
                 negative: Seq[Long] = Seq(4L, 5L),
                 k: Int = 20): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val examples = positive ++ negative
-    val perPos = emb
-      .filter(col("vec_id").isin(examples: _*))
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("v", col("v").cast("double"))
-      .groupBy(col("pos"))
-      .agg((coalesce(avg(when(col("vec_id").isin(positive: _*), col("v"))), lit(0.0)) -
-            coalesce(avg(when(col("vec_id").isin(negative: _*), col("v"))), lit(0.0))).as("qv"))
-    // Re-pack positions into an ordered array: sort (pos, qv) structs by
-    // pos, then project the qv field.
-    val qdf = perPos
-      .agg(array_sort(collect_list(struct(col("pos"), col("qv")))).as("pairs"))
-      .select(transform(col("pairs"), p => p.getField("qv")).as("q_emb"))
     val scored = emb
-      .filter(!col("vec_id").isin(examples: _*))
-      .crossJoin(broadcast(qdf))
+      .filter(!col("vec_id").isin(positive ++ negative: _*))
+      .crossJoin(broadcast(recommendVector(emb, positive, negative)))
       .withColumn("score", graft.GraftFunctions.cosine(col("embedding"), col("q_emb")))
     scored
       .orderBy(col("score").desc, col("vec_id"))
@@ -88,6 +81,22 @@ object VectorSearch {
       .select(col("vec_id"),
         row_number().over(Window.orderBy(col("score").desc, col("vec_id"))).as("rnk"))
       .orderBy(col("rnk"))
+  }
+
+  /** recommend's query side: one row holding `q_emb`, per position the
+    * average of the positive examples' embeddings minus that of the
+    * negative ones (a side with no example row counts as 0).
+    */
+  private[graft] def recommendVector(emb: DataFrame, positive: Seq[Long],
+                                     negative: Seq[Long]): DataFrame = {
+    def mean(vs: Column): Column =
+      graft.GraftFunctions.weightedMeanVector(vs, array_repeat(lit(1.0), size(vs)))
+    emb
+      .filter(col("vec_id").isin(positive ++ negative: _*))
+      .agg(collect_list(when(col("vec_id").isin(positive: _*), col("embedding"))).as("pos"),
+        collect_list(when(col("vec_id").isin(negative: _*), col("embedding"))).as("neg"))
+      .select(zip_with(mean(col("pos")), mean(col("neg")),
+        (p, n) => coalesce(p, lit(0.0)) - coalesce(n, lit(0.0))).as("q_emb"))
   }
 
   /** Exact k-NN join: every probe (small side, broadcast) against the

@@ -2,7 +2,8 @@ package graft
 
 /** Probe's loop on the shared session: a single-job search query and a
   * multi-job dedup query report the rows their forced plan produces,
-  * the jobs the listener saw and the formatted post-execution plan.
+  * the jobs the listener saw, its codegen line and the formatted
+  * post-execution plan.
   */
 class ProbeSpec extends SparkSpec {
 
@@ -15,6 +16,14 @@ class ProbeSpec extends SparkSpec {
       assert(r.rows == expected, r.name)
       assert(r.counters.jobs.get >= 1, r.name)
       assert(r.plan.contains("AdaptiveSparkPlan"), r.name)
+      val line = raw"\[probe\] (\S+) codegen round1=(\d+) round2=(\d+) compile_s=[0-9.]+".r
+      r.codegen match {
+        case line(n, _, round2) =>
+          assert(n == r.name)
+          // a warm re-run of a single-job query compiles no new class
+          if (n == "dense_topk") assert(round2 == "0", r.codegen)
+        case other => fail(s"unexpected codegen line: $other")
+      }
     }
   }
 }

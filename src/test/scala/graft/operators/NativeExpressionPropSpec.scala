@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Arbitrary, Gen}
 
 import graft.{GraftFunctions, SparkSpec}
+import graft.functions.TextFunctions
 
 /** Property-style randomized equivalence for the native expressions:
   * each must match the composed-column formulation it replaced on
@@ -209,6 +210,124 @@ class NativeExpressionPropSpec extends SparkSpec {
       .filter(col("e") =!= col("c"))
       .collect()
     assert(bad.isEmpty, s"first: ${bad.headOption}")
+  }
+
+  test("graft_bm25_term_counts equals explode(tokenizeBm25) counts on random unicode text") {
+    val pieceGen = Gen.frequency(
+      (6, Gen.identifier.map(_.take(7))),
+      (3, Gen.oneOf(" ", "  ", "\t", "\n", ", ", ". ", ";", "(", ")", "\"", "|", "\\")),
+      (2, Gen.oneOf("-dup_", "/vector/", "__x", "--", "_-/", "a-b", "a_b", "x/", "/y")),
+      // non-ASCII upper case and letters whose lower case differs by locale
+      (2, Gen.oneOf("ÉCOLE", "Straße", "ΣΟΦΙΑ", "Żółw", "İSTANBUL", "ẞ", "Ωmega", "ЖУК", "ﬁle")),
+      // surrogate pairs: a lone emoji is one code point, two UTF-16 units
+      (1, Gen.oneOf("🙂", "😃x", "a🙂", "🙂🙂", "𝔘𝔫𝔦")),
+      // junk tokens: hex ≥ 8, versions, paths, hex literals, digits
+      (2, Gen.oneOf("deadbeef", "DEADBEEF12", "v1.2", "1.2.3", "a/b", "a\\b", "0x1f", "0X1F",
+        "123", "12a", "cafe")))
+    val textGen = for {
+      n <- Gen.chooseNum(0, 30)
+      ps <- Gen.listOfN(n, pieceGen)
+    } yield ps.mkString
+    val texts: Seq[Option[String]] = sample(textGen, 300).map(Some(_)) ++
+      Seq(None, Some(""), Some("🙂"), Some("a🙂 dup dup DUP"), Some("-_/"))
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+    val exploded = df.select(col("id"), explode(TextFunctions.tokenizeBm25(col("text"))).as("t"))
+    // every token the column emits, plus terms it never emits: a lone
+    // emoji, upper case and junk expansion terms
+    val tokens = exploded.select("t").distinct().collect().map(_.getString(0)).toSeq.sorted
+    val terms = (tokens ++ Seq("🙂", "a🙂", "Dup", "123", "v1.2", "a/b", "0x1f", "deadbeef")).distinct
+    val expected = exploded.filter(col("t").isin(terms: _*))
+      .groupBy("id", "t").count().collect()
+      .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2).toInt).toMap
+    val columnTokens = df.filter(col("text").isNotNull)
+      .select(col("id"), TextFunctions.tokenizeBm25(col("text")))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    val got = df.select(col("id"), col("text"),
+        GraftFunctions.bm25TermCounts(col("text"), terms).as("c"))
+      .collect()
+    assert(got.length == texts.length)
+    got.foreach { r =>
+      val id = r.getLong(0)
+      if (r.isNullAt(1)) assert(r.isNullAt(2), s"NULL text must give NULL counts, id $id")
+      else {
+        // the driver-side tokenizer is the same scalar code
+        assert(SparseSearch.tokenizeBm25Query(r.getString(1)) == columnTokens(id), s"id $id")
+        val counts = r.getSeq[Int](2)
+        val want = terms.map(t => expected.getOrElse((id, t), 0))
+        assert(counts == want, s"id $id text '${r.getString(1)}' terms $terms")
+      }
+    }
+    assert(tokens.contains("a🙂") && !tokens.contains("🙂"))
+  }
+
+  /** recommend's query vector before the kernel: posexplode → per-position
+    * avg → re-packed array. */
+  private def recommendVectorComposed(emb: org.apache.spark.sql.DataFrame,
+                                      positive: Seq[Long], negative: Seq[Long]) =
+    emb.filter(col("vec_id").isin(positive ++ negative: _*))
+      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
+      .withColumn("v", col("v").cast("double"))
+      .groupBy(col("pos"))
+      .agg((coalesce(avg(when(col("vec_id").isin(positive: _*), col("v"))), lit(0.0)) -
+            coalesce(avg(when(col("vec_id").isin(negative: _*), col("v"))), lit(0.0))).as("qv"))
+      .agg(array_sort(collect_list(struct(col("pos"), col("qv")))).as("pairs"))
+      .select(transform(col("pairs"), p => p.getField("qv")).as("q_emb"))
+
+  /** semantic_rerank's mean vector before the kernel. */
+  private def weightedMeanComposed(ctx: org.apache.spark.sql.DataFrame) =
+    ctx.select(col("weight").cast("double").as("w"), posexplode(col("embedding")).as(Seq("pos", "v")))
+      .withColumn("v", col("v").cast("double"))
+      .groupBy(col("pos"))
+      .agg(when(sum(col("w")) > 1e-10, sum(col("v") * col("w")) / sum(col("w"))).as("qv"))
+      .filter(col("qv").isNotNull)
+      .agg(array_sort(collect_list(struct(col("pos"), col("qv")))).as("pairs"))
+      .select(transform(col("pairs"), p => p.getField("qv")).as("q_emb"))
+      .filter(size(col("q_emb")) > 0)
+
+  /** Both one-row query frames are equal under `<=>` (or both empty). */
+  private def assertSameVector(kernel: org.apache.spark.sql.DataFrame,
+                               composed: org.apache.spark.sql.DataFrame, clue: String): Unit = {
+    val k = kernel.select(col("q_emb").as("k"))
+    val c = composed.select(col("q_emb").as("c"))
+    assert(k.count() == c.count(), clue)
+    val same = k.crossJoin(c).select(col("k") <=> col("c")).collect().map(_.getBoolean(0))
+    assert(same.forall(identity), s"$clue: ${k.collect().toSeq} vs ${c.collect().toSeq}")
+  }
+
+  /** One input partition: both forms then sum the rows in scan order. */
+  private def onePartition(df: org.apache.spark.sql.DataFrame) =
+    spark.createDataFrame(spark.sparkContext.parallelize(df.collect().toSeq, 1), df.schema)
+
+  test("recommend's query vector equals the posexplode form under <=>") {
+    val vecGen = Gen.listOfN(8, Gen.chooseNum(-1.0f, 1.0f))
+    for (trial <- 0 until 2) {
+      val emb = onePartition(sample(vecGen, 12).zipWithIndex
+        .map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "embedding"))
+      // ids ≥ 100 are absent from the table
+      for ((case_, pos, neg) <- Seq(
+          ("both", Seq(1L, 2L, 3L), Seq(4L, 5L)),
+          ("positives only", Seq(1L, 7L, 11L), Seq(100L)),
+          ("negatives only", Seq(100L, 101L), Seq(0L, 9L)),
+          ("neither", Seq(100L), Seq(101L)))) {
+        assertSameVector(VectorSearch.recommendVector(emb, pos, neg),
+          recommendVectorComposed(emb, pos, neg), s"trial $trial, $case_")
+      }
+    }
+  }
+
+  test("semantic_rerank's mean vector equals the posexplode form under <=>") {
+    val rowGen = for {
+      v <- Gen.listOfN(6, Gen.chooseNum(-1.0f, 1.0f))
+      w <- Gen.oneOf(Gen.chooseNum(0.0, 5.0), Gen.oneOf(1.0, 2.0, 3.0))
+    } yield (v, w)
+    val cases = (0 until 6).map(i => s"random $i" -> sample(rowGen, 1 + i * 2)) ++ Seq(
+      "all-zero weights" -> sample(rowGen, 4).map { case (v, _) => (v, 0.0) },
+      "tiny weights" -> sample(rowGen, 3).map { case (v, _) => (v, 1e-12) },
+      "empty" -> Seq.empty[(List[Float], Double)])
+    for ((name, rows) <- cases) {
+      val ctx = onePartition(rows.toDF("embedding", "weight"))
+      assertSameVector(SemanticRerank.weightedMeanVector(ctx), weightedMeanComposed(ctx), name)
+    }
   }
 
   test("MmrSelect equals the column fold on random candidate/sim inputs") {

@@ -28,6 +28,16 @@ class SparseSearchSpec extends SparkSpec {
       t.contains("/") || t.startsWith("0x") || t.forall(_.isDigit)))
   }
 
+  test("tokenizeBm25Query tokenizes like the column: a lone emoji is one code point") {
+    // 🙂 is two UTF-16 units but one code point, so length > 1 drops it
+    assert(SparseSearch.tokenizeBm25Query("🙂") == Nil)
+    val q = "🙂 a🙂 Straße ΣΟΦΙΑ İstanbul DEADBEEF v1.2 a/b -dup_ 0x1f 123 Vector"
+    val viaColumn = Seq(q).toDF("text").select(TextFunctions.tokenizeBm25(col("text")))
+      .head().getSeq[String](0)
+    assert(SparseSearch.tokenizeBm25Query(q) == viaColumn)
+    assert(viaColumn.contains("a🙂") && viaColumn.contains("dup") && !viaColumn.contains("🙂"))
+  }
+
   test("bm25_topk returns ranked docs containing query terms") {
     val res = SparseSearch.bm25TopK(spark, sfDir).collect()
     assert(res.nonEmpty && res.length <= 10)
