@@ -7,7 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * All operators take a `sfDir` (e.g. `/root/testdata/sf0.01`) and read
   * one parquet file per table. Reads are plain `spark.read.parquet` so
   * Catalyst keeps full filter-pushdown / column-pruning freedom — never
-  * cache here; operators decide.
+  * cache here; operators decide. Loaders never write session conf: the
+  * nanos-as-long read that TIMESTAMP(NANOS) events need is set once by
+  * [[GraftSession.build]].
   */
 object Tables {
   /** Parquet footer SCHEMAS memoized per path and per the values of
@@ -42,9 +44,11 @@ object Tables {
 
   /** The events table's `ts` encoding has shifted across testdata
     * generations — TIMESTAMP(NANOS) (which Spark only reads as long via
-    * the legacy conf) vs plain timestamp[us] (which Spark reads as
-    * TIMESTAMP_NTZ under inferTimestampNTZ). Branch on the actual type
-    * the scan reports instead of hard-coding either:
+    * the legacy `nanosAsLong` conf, set by [[GraftSession.build]] and
+    * not here — a session built elsewhere must set it itself) vs plain
+    * timestamp[us] (which Spark reads as TIMESTAMP_NTZ under
+    * inferTimestampNTZ). Branch on the actual type the scan reports
+    * instead of hard-coding either:
     *   - LongType      → nanos-as-long; integer `div 1000` to micros (no
     *                     double routing; micro truncation matches DuckDB).
     *   - TIMESTAMP_NTZ → cast to session-tz timestamp (sessions run UTC,
@@ -55,7 +59,6 @@ object Tables {
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = load(spark, dir, "events")
     df.schema("ts").dataType match {
       case LongType       => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -67,10 +70,8 @@ object Tables {
   /** The `ts` type the events parquet scan reports (LongType under the
     * nanos legacy conf, or a timestamp type) — the branch point shared
     * with the streaming reader's explicit schema. */
-  def eventsTsType(spark: SparkSession, dir: String): org.apache.spark.sql.types.DataType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def eventsTsType(spark: SparkSession, dir: String): org.apache.spark.sql.types.DataType =
     cachedSchema(spark, s"$dir/events.parquet")("ts").dataType
-  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

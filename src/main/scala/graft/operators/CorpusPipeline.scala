@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Overlap, Tables}
 
 /** The composed end-to-end TRAINING-DATA pipeline — every corpus-quality
   * stage this library ships, run as ONE plan over ONE materialized
@@ -107,13 +107,6 @@ object CorpusPipeline {
     * with doc_id < evalMax are the fixed benchmark stand-in (the
     * decontaminate convention) and are not candidates.
     */
-  private def t[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime(); val r = f
-    if (sys.env.contains("SPARK_GRAFT_PIPE_TIMERS"))
-      System.err.println(f"[pipe] $label%-12s ${(System.nanoTime()-t0)/1e9}%.2fs")
-    r
-  }
-
   def corpusPipelineOf(corpus: DataFrame,
                        evalMax: Long = 50L, dfThreshold: Int = 3,
                        vocabSize: Int = 10000, lmThreshold: Double = -4.0,
@@ -138,6 +131,9 @@ object CorpusPipeline {
                        // stays bit-identical (CorpusPipelineSpec).
                        pairFamily: (DataFrame, Int, Int, Double) => DataFrame =
                          Dedup.dedupMinhashOracleOf(_, _, _, _, ordered = false)): DataFrame = {
+    // every eager stage's jobs carry a `corpus_pipeline/<stage>` label
+    def stage[T](label: String)(f: => T): T =
+      Overlap.labelled(corpus.sparkSession, s"corpus_pipeline/$label")(f)
     val eval = corpus.filter(col("doc_id") < evalMax)
     val cand = corpus.filter(col("doc_id") >= evalMax)
 
@@ -149,7 +145,7 @@ object CorpusPipeline {
     // width bought: capped pipeline 10.6 -> 13.5 s with both pins
     // repartitioned; reverted. The per-row-heavy stages downstream
     // already parallelize off the rewrite join's own shuffle.)
-    val cleaned = t("cleaned")(Boilerplate.cleanedTextOf(cand, dfThreshold)
+    val cleaned = stage("cleaned")(Boilerplate.cleanedTextOf(cand, dfThreshold)
       .localCheckpoint())
 
     // Stage 2 — parallel quality gates on the cleaned text.
@@ -179,22 +175,22 @@ object CorpusPipeline {
     val lm = LmQuality.lmQualityOf(
         cleaned.select(col("doc_id"), col("text")), vocabSize, lmThreshold)
       .select(col("doc_id"), col("keep").cast("long").as("lm_keep"))
-    val gates = t("gates")(rep.join(lm, Seq("doc_id")).localCheckpoint())
+    val gates = stage("gates")(rep.join(lm, Seq("doc_id")).localCheckpoint())
     def withText(ids: DataFrame): DataFrame =
       cleaned.join(ids, Seq("doc_id"), "left_semi")
-    val passerIds = t("passers")(gates
+    val passerIds = stage("passers")(gates
       .filter(col("rep_keep") === 1 && col("lm_keep") === 1)
       .select(col("doc_id"))
       .localCheckpoint())
     val passers = withText(passerIds)
 
     // Stage 3 — decontamination, gate survivors vs the RAW benchmark.
-    val deco = t("deco")(Decontamination.decontaminateOf(
+    val deco = stage("deco")(Decontamination.decontaminateOf(
         passers.select(col("doc_id"), col("text")),
         eval.select(col("doc_id"), col("text")), ngram)
       .select(col("doc_id"), col("contaminated").cast("long").as("contaminated"))
       .localCheckpoint())
-    val survivorIds = t("survivors")(passerIds
+    val survivorIds = stage("survivors")(passerIds
       .join(deco.filter(col("contaminated") === 0).select(col("doc_id")),
         Seq("doc_id"), "left_semi")
       .localCheckpoint())
@@ -205,14 +201,14 @@ object CorpusPipeline {
     // unchanged via dedupMinhashOf).
     // pairs pinned: the component algorithm's budget gate and its
     // label iteration would each re-run the candidate/verify joins
-    val pairs = t("pairs")(pairFamily(
+    val pairs = stage("pairs")(pairFamily(
       survivors.select(col("doc_id"), col("text")),
       bands, rowsPerBand, jaccardThreshold)
       .localCheckpoint())
     val clusters = Dedup.dedupClustersOf(pairs,
       survivors.select(col("doc_id"), length(col("text")).cast("long").as("keep_rank")))
     // unclustered survivors: cluster_id 0, size 0, kept
-    val dupVerdict = t("dupVerdict")(survivorIds
+    val dupVerdict = stage("dupVerdict")(survivorIds
       .join(clusters, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), lit(0L)).as("cluster_id"),

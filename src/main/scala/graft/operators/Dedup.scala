@@ -229,6 +229,15 @@ object Dedup {
       Tables.documents(spark, dir).select(col("doc_id"), col("text")),
       window = window)
 
+  /** The oracle-portable band-bucket keys: per band, the plain
+    * signature-value tuple joined as a string. One HOF lambda regardless
+    * of band count (constant generated-code size; value-identical to the
+    * per-band concat_ws unroll). */
+  private val portableBandBuckets: (String, Int, Int) => Column = (sigName, nb, rpb) => expr(
+    s"transform(sequence(0, ${nb - 1}), b -> concat_ws(':', " +
+      (0 until rpb).map(r => s"cast(element_at($sigName, b*$rpb+$r+1) as string)")
+        .mkString(", ") + "))")
+
   /** §3 `*Of` form of dedup_minhash_capped_oracle. */
   def dedupMinhashCappedOracleOf(corpus: DataFrame,
                                  bands: Int = 12, rowsPerBand: Int = 3,
@@ -244,13 +253,7 @@ object Dedup {
       // (NativeExpressionPropSpec) and the generated DuckDB oracle
       // recomputes md5 itself, so the cert is unaffected
       _ => graft.GraftFunctions.md5ShingleHashes(col("text")),
-      // one HOF lambda regardless of band count (constant generated-code
-      // size; value-identical to the per-band concat_ws unroll)
-      (sigName, nb, rpb) => expr(
-        s"transform(sequence(0, ${nb - 1}), b -> concat_ws(':', " +
-          (0 until rpb).map(r =>
-            s"cast(element_at($sigName, b*$rpb+$r+1) as string)")
-            .mkString(", ") + "))"),
+      portableBandBuckets,
       bucketWindow = window, passes = passes, ordered = ordered)
 
   /** Oracle-portable twin of dedup_minhash (same recipe as
@@ -283,13 +286,7 @@ object Dedup {
       // native one-pass md5-nibble shingle stage (round 16; see the
       // capped twin above — bit-identical, oracle unaffected)
       _ => graft.GraftFunctions.md5ShingleHashes(col("text")),
-      // one HOF lambda regardless of band count (constant generated-code
-      // size; value-identical to the per-band concat_ws unroll)
-      (sigName, nb, rpb) => expr(
-        s"transform(sequence(0, ${nb - 1}), b -> concat_ws(':', " +
-          (0 until rpb).map(r =>
-            s"cast(element_at($sigName, b*$rpb+$r+1) as string)")
-            .mkString(", ") + "))"),
+      portableBandBuckets,
       ordered = ordered)
 
   /** Universal-hash coefficient table shared by both minhash variants
@@ -626,17 +623,7 @@ object Dedup {
     */
   def dedupSimhash(spark: SparkSession, dir: String,
                    maxHamming: Int = 7): DataFrame = {
-    // Same explicit width as the oracle/LSH twins (round 16 — this
-    // variant was the one member of the family missing it): the
-    // tokenize + per-token-hash simhash projection otherwise inherits
-    // the scan's split count — a single-row-group parquet file runs
-    // the whole corpus's token hashing on ONE task (measured 2.7 of
-    // its 2.9 s wall on one core at sf0.1).
-    val shufP = spark.sessionState.conf.numShufflePartitions
-    val docs = Tables.documents(spark, dir)
-      .repartition(shufP, col("doc_id"))
-      .select(col("doc_id"), tokenizeSimple(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
+    val docs = simhashTokens(Tables.documents(spark, dir))
 
     // simhash bit j = sign of sum over tokens of (bit j of hash ? 1 : -1)
     // — computed by the graft_simhash64 expression in ONE pass inside
@@ -667,14 +654,7 @@ object Dedup {
 
   /** §3 `*Of` form of dedup_simhash_oracle over a (doc_id, text) frame. */
   def dedupSimhashOracleOf(corpus: DataFrame, maxHamming: Int = 7): DataFrame = {
-    // Same explicit width as dedupSimhashLshOf: the per-token md5
-    // projection must not inherit the scan's split count.
-    val shufP = corpus.sparkSession.sessionState.conf.numShufflePartitions
-    val docs = corpus
-      .repartition(shufP, col("doc_id"))
-      .select(col("doc_id"), tokenizeSimple(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
-    val sims = docs.select(col("doc_id"),
+    val sims = simhashTokens(corpus).select(col("doc_id"),
       graft.GraftFunctions.simhashBits(
         // native element-wise md5-nibble token hashes (round 16) —
         // bit-identical to the composed transform, no hex-string
@@ -716,20 +696,7 @@ object Dedup {
   /** §3 `*Of` form of dedup_simhash_lsh over a (doc_id, text) frame. */
   def dedupSimhashLshOf(corpus: DataFrame, maxHamming: Int = 7,
                         tables: Int = 24, bitsPerTable: Int = 16): DataFrame = {
-    // Explicit width before the heavy projection (the minhashCore
-    // lesson applied here BEFORE it bites): tokenize + per-token md5 +
-    // 24 sampled-bit keys hang off whatever partitioning the scan
-    // emits — at ×100 the corpus arrived as 8 parquet splits and the
-    // whole stage ran 8-wide with one straggler task (jstack'd at
-    // 27 min of CPU in the tokenizer). Work per row is orders of
-    // magnitude heavier than its bytes; spread it to the session's
-    // shuffle width first.
-    val shufP = corpus.sparkSession.sessionState.conf.numShufflePartitions
-    val docs = corpus
-      .repartition(shufP, col("doc_id"))
-      .select(col("doc_id"), tokenizeSimple(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
-    val sims = docs.select(col("doc_id"),
+    val sims = simhashTokens(corpus).select(col("doc_id"),
       graft.GraftFunctions.simhashBits(
         // native md5-nibble token hashes (round 16; see the oracle twin)
         graft.GraftFunctions.md5Hashes(col("toks")))
@@ -752,16 +719,7 @@ object Dedup {
     val keyed = sims.select(col("doc_id"), col("simhash"),
       posexplode(graft.GraftFunctions.simhashLshKeys(col("simhash"), positions))
         .as(Seq("tbl", "k")))
-    val l = keyed.select(col("tbl"), col("k"), col("doc_id").as("a"), col("simhash").as("sh_a"))
-    val r = keyed.select(col("tbl"), col("k"), col("doc_id").as("b"), col("simhash").as("sh_b"))
-    // hamming verify before the pair dedup, as in simhashPairs
-    l.join(r, Seq("tbl", "k"))
-      .filter(col("a") < col("b"))
-      .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("a", "b")
-      .select(col("a"), col("b"), col("hamming").cast("int").as("hamming"))
-      .orderBy(col("a"), col("b"))
+    hammingPairs(keyed, Seq("tbl", "k"), maxHamming)
   }
 
   /** The sampled bit-position table shared by the Spark path and the
@@ -804,16 +762,39 @@ object Dedup {
         struct(lit(c).as("chunk"), piece.as("ck"))
       }: _*)).as("cc"))
       .select(col("doc_id"), col("simhash"), col("cc.chunk").as("chunk"), col("cc.ck").as("ck"))
+    hammingPairs(chunks, Seq("chunk", "ck"), maxHamming)
+  }
 
-    val l = chunks.select(col("chunk"), col("ck"), col("doc_id").as("a"), col("simhash").as("sh_a"))
-    val r = chunks.select(col("chunk"), col("ck"), col("doc_id").as("b"), col("simhash").as("sh_b"))
-    // Hamming filter BEFORE the pair dedup: a pair's hamming distance is
-    // fixed, so filter-then-distinct equals distinct-then-filter — but
-    // the filter is map-side inside the join's codegen stage and kills
-    // ~99% of collision rows, while distinct is a shuffle whose cost
-    // scales with what reaches it (measured at sf0.1: 6.5M collision
-    // rows → 4.9 s distinct before, ~250k rows → negligible after).
-    l.join(r, Seq("chunk", "ck"))
+  /** The simhash family's prelude over a (doc_id, text, ...) frame:
+    * explicit width, tokenize, drop token-less docs. The width comes
+    * BEFORE the per-token hashing, whose work per row is orders of
+    * magnitude heavier than its bytes: otherwise the projection
+    * inherits the scan's split count — a single-row-group parquet file
+    * ran the whole corpus's token hashing on ONE task (2.7 of 2.9 s
+    * wall at sf0.1), and at ×100 eight splits ran the stage 8-wide with
+    * one straggler task (27 min of CPU in the tokenizer).
+    */
+  private def simhashTokens(corpus: DataFrame): DataFrame =
+    corpus
+      .repartition(corpus.sparkSession.sessionState.conf.numShufflePartitions, col("doc_id"))
+      .select(col("doc_id"), tokenizeSimple(col("text")).as("toks"))
+      .filter(size(col("toks")) > 0)
+
+  /** Verified pairs from a (keys..., doc_id, simhash) candidate table:
+    * self-join on the blocking `keys`, one orientation per pair, exact
+    * hamming ≤ `maxHamming`, one row per pair, ordered.
+    *
+    * Hamming filter BEFORE the pair dedup: a pair's hamming distance is
+    * fixed, so filter-then-distinct equals distinct-then-filter — but
+    * the filter is map-side inside the join's codegen stage and kills
+    * ~99% of collision rows, while distinct is a shuffle whose cost
+    * scales with what reaches it (measured at sf0.1: 6.5M collision
+    * rows → 4.9 s distinct before, ~250k rows → negligible after).
+    */
+  private def hammingPairs(keyed: DataFrame, keys: Seq[String], maxHamming: Int): DataFrame = {
+    val side = (id: String, sh: String) =>
+      keyed.select(keys.map(col) :+ col("doc_id").as(id) :+ col("simhash").as(sh): _*)
+    side("a", "sh_a").join(side("b", "sh_b"), keys)
       .filter(col("a") < col("b"))
       .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
       .filter(col("hamming") <= maxHamming)

@@ -27,46 +27,6 @@ import graft.Tables
   */
 object GraphAlgorithms {
 
-  /** Run `f` with a shuffle-partition count sized to the rows each
-    * iteration actually shuffles (edge entries for vote/contribution
-    * joins — the dominant flow, not the node count), restoring the
-    * session default after. The iterative algorithms materialize
-    * (localCheckpoint) inside the loop, so the setting applies to every
-    * per-iteration shuffle — on a derived entity graph orders smaller
-    * than the raw data, the session default is pure task-scheduling
-    * overhead per iteration, the dominant cost the round-2 bench
-    * measured. Sizing: one partition per ~200k shuffled rows, floor 8,
-    * never above the session default (a billion-edge graph keeps full
-    * parallelism).
-    *
-    * CONCURRENCY CONTRACT: this mutates the session-global
-    * `spark.sql.shuffle.partitions` for the duration of `f` (and `f`
-    * must materialize its own stages — the iterative callers
-    * localCheckpoint inside the loop, so every sized shuffle executes
-    * before the finally-restore). A query running CONCURRENTLY on the
-    * same SparkSession would see the reduced setting; the bench/verify
-    * harnesses are single-threaded by design. Shared-session callers
-    * should run graph algorithms on `spark.newSession()` (same shared
-    * SparkContext, isolated SQL conf).
-    */
-  def withGraphSizedShuffle[T](spark: SparkSession, rowsPerIteration: Long)(f: => T): T =
-    // Exclusive (round 16): callers may now run graph algorithms from
-    // worker threads (graphLeidenCert overlaps Leiden with the
-    // label-prop baseline), and two concurrent mutators of the
-    // session-global setting could restore each other's SIZED value as
-    // the "previous" one, leaving the session reduced. The lock
-    // serializes only the over-budget distributed loops; compact-path
-    // callers never enter here.
-    shuffleSizingLock.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      val sized = math.max(8L, rowsPerIteration / 200000L).min(prev.toLong)
-      spark.conf.set(key, sized.toString)
-      try f finally spark.conf.set(key, prev)
-    }
-
-  private val shuffleSizingLock = new Object
-
   /** Distinct supplier→customer edges via shared orders.
     *
     * The distinct runs on the INTEGER key pair and the namespaced
@@ -148,11 +108,7 @@ object GraphAlgorithms {
     val (_, estBytes) = estimatedAdjacencyBytes(adjDf)
     if (estBytes <= gatedBudget(broadcastByteBudget))
       pageRankCompact(nodes, adjDf, n, iterations, damping)
-    else
-      // contributions shuffle one row per edge each iteration
-      withGraphSizedShuffle(edgeDf.sparkSession, e.count()) {
-        pageRankEdgesImpl(e, nodes, n, iterations, damping)
-      }
+    else pageRankEdgesImpl(e, nodes, n, iterations, damping)
   }
 
   /** Under-budget twin of [[pageRankEdgesImpl]] on collected compact
@@ -284,11 +240,7 @@ object GraphAlgorithms {
       .agg(sort_array(collect_set(col("b"))).as("nbrs"))
     val (_, estBytes) = estimatedAdjacencyBytes(adjDf)
     if (estBytes <= gatedBudget(broadcastByteBudget)) communitiesCompact(adjDf, iterations, minSize)
-    else
-      // votes shuffle one row per undirected edge entry each iteration
-      withGraphSizedShuffle(edgeDf.sparkSession, undirected.count()) {
-        communitiesEdgesImpl(undirected, iterations, minSize)
-      }
+    else communitiesEdgesImpl(undirected, iterations, minSize)
   }
 
   /** Under-budget twin of [[communitiesEdgesImpl]] on collected compact
@@ -480,17 +432,7 @@ object GraphAlgorithms {
     val (nNodes, estBytes) = estimatedAdjacencyBytes(adjDf)
     if (estBytes <= gatedBudget(broadcastByteBudget))
       betweennessBroadcast(spark, adjDf, nNodes, maxSamples)
-    else {
-      // Size per-iteration shuffles to the frontier flow (≤ samples ×
-      // edge entries in the worst level), like pagerank/communities —
-      // at sf0.1 the session default is pure task-scheduling overhead
-      // per BFS level, ~2·diameter times over.
-      val entries = adjDf
-        .agg(coalesce(sum(size(col("nbrs"))), lit(0L))).head().getLong(0)
-      withGraphSizedShuffle(spark, entries * math.min(maxSamples.toLong, math.max(nNodes, 1L))) {
-        betweennessFrontier(spark, und, adjDf.select(col("u")), nNodes, maxSamples)
-      }
-    }
+    else betweennessFrontier(spark, und, adjDf.select(col("u")), nNodes, maxSamples)
   }
 
   /** reference normalize_betweenness (betweenness.rs:103). */

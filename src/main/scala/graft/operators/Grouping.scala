@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Overlap, Tables}
 
 /** Project affinity grouping — tag-based Jaccard affinity
   * (grouping/affinity/tag_affinity.rs: per-project distinct tag
@@ -284,45 +284,24 @@ object Grouping {
     // is eager (internal localCheckpoints, gate counts, the union-find
     // collects) — built sequentially they serialize ~80 small driver
     // jobs while the cluster idles (measured 9.2 s wall for 10.3 task-
-    // seconds at sf0.1/local[32]). Build them from a small thread pool
-    // (guide §2.6 overlap-independent-jobs: Spark's scheduler runs
-    // concurrent jobs fine; job submission is thread-safe) so each
-    // strategy's job chain back-fills the others' idle time — the same
+    // seconds at sf0.1/local[32]). Building them concurrently lets each
+    // strategy's job chain back-fill the others' idle time — the same
     // win on a real cluster, where these chains leave executors idle
     // between tiny stages. Results and union order are unchanged.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val t0 = System.nanoTime()
-    def timed[T](label: String)(f: => T): T = {
-      val s = (System.nanoTime() - t0) / 1e9; val r = f
-      if (sys.env.contains("SPARK_GRAFT_PIPE_TIMERS"))
-        System.err.println(f"[pgroups] $label%-8s start=$s%.2f end=${(System.nanoTime() - t0) / 1e9}%.2f")
-      r
-    }
-    try {
-      val fTaff = Future(timed("taff") {
-        val tenants = Tables.documents(spark, dir)
-          .select(col("doc_id"), col("source").as("tenant_id"))
-        tagAffinityGroupsOf(KeywordTags.keywordTags(spark, dir), tenants)
-      })
-      val fAff = Future(timed("aff")(affinityGroups(spark, dir)))
-      val fGorg = Future(timed("gorg")(gitOrgGroups(spark, dir)
+    Overlap.all(spark)(
+      "project_groups/tag_affinity" -> (() => tagAffinityGroupsOf(
+        KeywordTags.keywordTags(spark, dir),
+        Tables.documents(spark, dir).select(col("doc_id"), col("source").as("tenant_id")))),
+      "project_groups/affinity" -> (() => affinityGroups(spark, dir)),
+      "project_groups/git_org" -> (() => gitOrgGroups(spark, dir)
         .select(col("group_id"), col("tenant_id"),
-          lit("git_org").as("group_type"), lit(1.0).as("confidence"))))
-      val fDep = Future(timed("dep")(DependencyGrouping.dependencyGroups(spark, dir)
+          lit("git_org").as("group_type"), lit(1.0).as("confidence"))),
+      "project_groups/dependency" -> (() => DependencyGrouping.dependencyGroups(spark, dir)
         .select(col("group_id"), col("tenant_id"),
-          lit("dependency").as("group_type"), col("similarity").as("confidence"))))
-      val fWs = Future(timed("ws")(workspaceGroups(spark, dir)))
-      val taff = Await.result(fTaff, Duration.Inf)
-      val aff = Await.result(fAff, Duration.Inf)
-      val gorg = Await.result(fGorg, Duration.Inf)
-      val dep = Await.result(fDep, Duration.Inf)
-      val ws = Await.result(fWs, Duration.Inf)
-      taff.unionByName(aff).unionByName(gorg).unionByName(dep).unionByName(ws)
-        .orderBy(col("group_type"), col("group_id"), col("tenant_id"))
-    } finally pool.shutdown()
+          lit("dependency").as("group_type"), col("similarity").as("confidence"))),
+      "project_groups/workspace" -> (() => workspaceGroups(spark, dir)))
+      .reduce(_.unionByName(_))
+      .orderBy(col("group_type"), col("group_id"), col("tenant_id"))
   }
 
   /** normalize_git_url (common/src/project_id/calculator.rs:76) as one

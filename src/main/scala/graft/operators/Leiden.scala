@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
+import graft.{Overlap, Tables}
 
 /** Leiden community detection over the order-derived relationship graph
   * (reference: src/rust/daemon/core/src/graph/algorithms/leiden/mod.rs —
@@ -150,22 +150,16 @@ object Leiden {
     // The two memberships are INDEPENDENT (Leiden's sequential driver
     // loop vs the label-prop baseline's compact rounds) and each ends
     // in its own driver compute over the same pinned frames — built
-    // sequentially the cert paid sum-of-chains (round 16, guide §2.6):
-    // overlap them on two threads; `leidenUnd` additionally reuses the
-    // symmetrized frame above instead of re-deriving it from `e`.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val (qLeiden, qLp) = try {
-      val fLeiden = Future(modularityOf(und, leidenUnd(spark, und, Config()))
-        .select(col("modularity").as("q_leiden")).localCheckpoint())
-      val fLp = Future(modularityOf(und,
+    // sequentially the cert paid sum-of-chains, so they overlap;
+    // `leidenUnd` additionally reuses the symmetrized frame above
+    // instead of re-deriving it from `e`.
+    val Seq(qLeiden, qLp) = Overlap.all(spark)(
+      "graph_leiden_cert/leiden" -> (() => modularityOf(und, leidenUnd(spark, und, Config()))
+        .select(col("modularity").as("q_leiden")).localCheckpoint()),
+      "graph_leiden_cert/labelprop" -> (() => modularityOf(und,
           GraphAlgorithms.communitiesEdges(
             e.select(col("src"), col("dst")), iterations = 10, minSize = 1))
-        .select(col("modularity").as("q_labelprop")).localCheckpoint())
-      (Await.result(fLeiden, Duration.Inf), Await.result(fLp, Duration.Inf))
-    } finally pool.shutdown()
+        .select(col("modularity").as("q_labelprop")).localCheckpoint()))
     val totalW = und.agg((sum(col("w")) / 2).cast("long").as("total_w"))
     // EXACT-REPRESENTABILITY DEPENDENCY (round-14 advice): hashing
     // round(q_labelprop, 6) against DuckDB's independently-summed
@@ -315,12 +309,7 @@ object Leiden {
       // communities in the output are attributable to this log line.
       log.info(s"graph_leiden: adjacency ~$estBytes bytes over budget " +
         s"$broadcastByteBudget — distributed frontier path (no refine/split)")
-      // Per-round shuffles sized to the edge flow (wTo joins und once
-      // per bucket-round): at small SFs the session default is pure
-      // task-scheduling overhead × sweeps × buckets rounds.
-      GraphAlgorithms.withGraphSizedShuffle(spark, und.count()) {
-        leidenFrontier(spark, und, config, buckets)
-      }
+      leidenFrontier(spark, und, config, buckets)
     }
   }
 
